@@ -31,88 +31,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["full_clean_reassemble"](spark, "/root/testdata/sf0.001")
 
 
-# ---------------------------------------------------------------------------
-# Driver-window rotation (harness policy — deliberately OUTSIDE the library:
-# quality_filter.entry_queries keeps stable registration order for its own
-# consumers and for tests/test_entry_contract.py, which verifies EVERY entry
-# regardless of position).
-#
-# The driver's correctness harness stamps only the first ~50 entries of
-# queries() each round (observed r3-r8).  Round 9 is the optimization
-# round: the scan-spread/lambda-hoist/pushdown-barrier work touched the
-# transitive code path of 72 of the 79 rows (the mechanical audit in
-# tests/window_audit.py counts only 7 rows as byte-identical since the
-# r8-stamped tree), so a 50-row window cannot hold every touched row.
-# Rotation plan:
-#   head  — the 50 most deeply changed rows, deepest first: rewritten
-#           operators (qmodel feature checkpoint, Bloom vector probe,
-#           multimodal batch-dedup, arrow_udf scorer rows, fused clean
-#           lane) ahead of spread-only rows.
-#   tail  — the 29 rows left outside: the 7 audit-proven-untouched rows
-#           plus 22 whose OWN operator logic is unchanged (their audit
-#           flag comes from shared helpers: the scan spread, the
-#           derive_turns split hoist).  Every tail row is additionally
-#           re-verified on THIS round's final tree against the DuckDB
-#           oracle by exact sorted-row comparison at sf0.001/0.01/0.1
-#           (strictly stronger than the driver's hash check), with the
-#           committed artifact BENCH/r9_oracle_sweep.json as evidence —
-#           enforced by tests/test_window_rotation.py.
-# ---------------------------------------------------------------------------
-
-# the tree the round-8 driver stamped (the artifact commits ad0c817 /
-# 0d257a3 changed no library code — `git diff 011a4c1 0d257a3 --
-# quality_filter/` is empty); full 40-char hash per ADVICE r7 #5
-_R9_BASE_COMMIT = "011a4c1d42eb5fb4d5409763bee8f9f5722d4e57"
-
-_R9_HEAD = [
-    # rewritten operator internals — stamp these first
-    "qmodel_train_score", "decontaminate_bloom_docs", "multimodal_features",
-    "quality_weighted_docs", "full_clean_reassemble", "rules_score",
-    "repetition_stats", "c4_line_filter", "corpus_build_docs",
-    "fused_gate_docs", "langid_turns", "perplexity_turns",
-    "perplexity_values", "salvage_langid_e2e", "teacher_label_loop",
-    # scan-spread + shared-expression rows with heavier operator surface
-    "minhash_candidates", "near_dup_clusters", "near_dup_dedup_docs",
-    "semantic_dedup_docs", "substring_dedup_docs", "ann_ivf_top5",
-    "ann_cosine_top5", "embedding_near_dups", "decontaminate_docs",
-    "label_freq", "label_top3", "filter_by_label", "trim_by_label",
-    "filter_by_score", "trim_by_score", "salvage_filter", "min_doc_length",
-    "reassemble_docs", "scrub_pii", "gopher_quality_flags",
-    "gopher_repetition", "top_quality_docs", "doc_quality_score",
-    "quality_corr", "doc_quality_corr", "langid_sql_docs",
-    "langid_train_score", "perplexity_lm_roundtrip", "eval_report",
-    "eval_summary", "cohen_kappa", "tfidf_top_terms",
-    "paragraph_dedup_docs", "simhash16_docs", "cap_per_source_docs",
-]
-_R9_TAIL = [
-    # audit-proven untouched since the r8-stamped tree
-    "stratified_split", "semi_join_purchasers", "window_events",
-    "tpch_pricing_summary", "union_distinct_users", "shard_events",
-    "sessionize_events",
-    # own operator logic unchanged (shared-helper drift only) + r9
-    # 3-SF oracle-sweep green on the final tree
-    "lang_source_crosstab", "lang_code_names", "doc_cleanliness_bucket",
-    "doc_quality_stats", "class_weights", "resegment_docs",
-    "llm_output_repair", "classify_prompt_format", "mixture_resample_docs",
-    "mixture_upsample_docs", "jaccard_near_dups", "doc_fingerprint",
-    "dedup_convs_exact", "paragraph_dedup_hashed", "exact_dedup_docs",
-    "pack_chunks", "pack_sequences", "doc_length_histogram", "top_tokens",
-    "length_quantiles_by_source", "dedup_prefix_exact", "token_stats",
-]
-
-
-def _window_order(names: list[str]) -> list[str]:
-    head = [n for n in _R9_HEAD if n in names]
-    tail = [n for n in _R9_TAIL if n in names]
-    placed = set(head) | set(tail)
-    mid = [n for n in names if n not in placed]
-    return head + mid + tail
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from quality_filter.entry_queries import QUERIES
 
-    return {n: QUERIES[n] for n in _window_order(list(QUERIES))}
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

@@ -68,7 +68,9 @@ def connected_components(
 
     Pass a dict as ``stats`` to receive ``{"iterations": k}`` — the
     bench harness uses it to evidence rounds-to-convergence vs input
-    scale.
+    scale.  ``max_iter`` bounds the rounds, the fused first one included;
+    propagation needs ``max_iter >= 2`` (ValueError otherwise), since only
+    a second, unchanged round confirms convergence.
 
     Returns (``id_col``, cluster_rep) where cluster_rep is the minimum
     vertex id reachable from the vertex (the component's canonical
@@ -80,6 +82,8 @@ def connected_components(
         )
     if algorithm != "propagation":
         raise ValueError(f"unknown algorithm: {algorithm!r}")
+    if max_iter < 2:
+        raise ValueError(f"max_iter must be >= 2 for propagation, got {max_iter}")
     from pyspark import StorageLevel
 
     # both directions via one explode, NOT union(edges, edges.swapped):

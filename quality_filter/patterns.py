@@ -6,7 +6,7 @@ must agree byte-for-byte:
 1. Spark Catalyst expressions (Java ``java.util.regex``) in ``rules.py`` /
    ``scrub.py``;
 2. the pure-Python golden oracle in ``tests/oracle.py`` (``re``);
-3. generated DuckDB oracle SQL (RE2) in ``__spark_entry__.py``.
+3. generated DuckDB oracle SQL (RE2) in ``sqlgen.py``.
 
 Therefore every pattern is written in the common subset of the three
 dialects: NO backreferences, NO lookaround, NO inline flags inside the

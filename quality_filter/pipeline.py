@@ -40,8 +40,8 @@ from typing import Iterable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from quality_filter.labels import parse_labels
-from quality_filter.rules import score_turns
+from quality_filter.labels import LABELS, parse_labels
+from quality_filter.rules import barrier_filter, clean_fastpath_scored, score_turns
 from quality_filter.scrub import scrub_turns
 
 SALVAGE_SCORE_THRESHOLD = 0.9  # strict > (src/salvage_low_quality_data.py:185)
@@ -336,9 +336,6 @@ def clean_pipeline(
         raise ValueError("Must choose either 'trim' or 'filter'")
     if score_threshold is None and labels_to_remove is None:
         raise ValueError("one of labels_to_remove / score_threshold is required")
-    from quality_filter.labels import LABELS
-    from quality_filter.rules import clean_fastpath_predicate
-
     remove_all = (
         score_threshold is None
         and set(parse_labels(labels_to_remove)) == set(LABELS[1:])
@@ -353,8 +350,6 @@ def clean_pipeline(
         # and the score (the predicate path re-derived every count per
         # evaluation, and inline lower(text) in the guards' OR chains
         # re-lowered per probe — codegen CSE skips conditional branches).
-        from quality_filter.rules import clean_fastpath_scored
-
         out = clean_fastpath_scored(df)
     else:
         scored = score_turns(df)
@@ -370,8 +365,6 @@ def clean_pipeline(
             # barrier column is folded into the predicate itself
             # (rules.barrier_filter) — a bare barrier column is pruned
             # as unreferenced and the pushdown then happens anyway.
-            from quality_filter.rules import barrier_filter
-
             out = barrier_filter(scored, keep)
         else:
             out = apply_trim_mode(scored, keep, strategy)

@@ -8,14 +8,21 @@ rounding, matching ``round(score, 3)`` at
 ``src/classifier_inference_pipeline.py:88`` (Spark ``bround`` == Python
 ``round`` == HALF_EVEN).
 
-Everything here is a single Catalyst projection — no UDFs, fully
-whole-stage-codegen'd, and trivially parallel at any scale (no shuffle).
-Rule precedence is frozen (first match wins); the same order is implemented
-by the Python golden oracle and the generated DuckDB oracle SQL, so the
-three implementations are bit-identical.
+Everything here is narrow Catalyst projections and filters — no UDFs,
+fully whole-stage-codegen'd, and trivially parallel at any scale (no
+shuffle).  Each rule, feature and score formula has one definition, in
+``_rule_columns``, built once per process and shared by ``score_turns``
+(every row labelled and scored) and ``clean_fastpath_scored`` (Clean rows
+only).  Rule precedence is frozen (first match wins); the same order is
+implemented by the Python golden oracle and the generated DuckDB oracle
+SQL, so the three implementations are bit-identical.
 """
 
 from __future__ import annotations
+
+import functools
+import operator
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -48,35 +55,6 @@ MIN_CHARS_FOR_ALPHA_RULE = 4
 # clean_score formula weights (frozen; mirrored in oracle + DuckDB SQL).
 W_ALPHA, W_LEN, W_SYM = 0.6, 0.3, 0.1
 LEN_NORM = 120
-
-
-def feature_columns(text: Column) -> dict[str, Column]:
-    """Character-class counts/ratios used by the formatting rule and score.
-
-    Letter counting uses Unicode-aware ``\\p{L}`` (one regex pass); digit
-    and whitespace counts use ``translate`` (a plain char-map pass, several
-    times cheaper than a regex scan) — provably identical to counting the
-    ASCII classes ``[0-9]`` / ``[ \\t\\r\\n\\x0B\\f]`` the oracle uses.
-    """
-    n_chars = F.length(text)
-    # length-diff of a regexp_replace beats regexp_count (which
-    # materializes every single-char match into an array per row);
-    # matching letter RUNS removes the same characters with one regex
-    # iteration per run instead of per letter (~2.5× on mostly-letter
-    # text, identical count)
-    n_letter = n_chars - F.length(F.regexp_replace(text, r"\p{L}+", ""))
-    n_digit = n_chars - F.length(F.translate(text, "0123456789", ""))
-    n_space = n_chars - F.length(F.translate(text, " \t\r\n\x0b\f", ""))
-    n_nonspace = n_chars - n_space
-    n_symbol = n_chars - n_letter - n_digit - n_space
-    alpha_ratio = n_letter.cast("double") / F.greatest(F.lit(1), n_nonspace)
-    symbol_ratio = n_symbol.cast("double") / F.greatest(F.lit(1), n_chars)
-    return {
-        "n_chars": n_chars,
-        "n_nonspace": n_nonspace,
-        "alpha_ratio": alpha_ratio,
-        "symbol_ratio": symbol_ratio,
-    }
 
 
 # --- per-rule two-level screen ---------------------------------------------
@@ -155,151 +133,102 @@ def _has_digit(lowered: Column) -> Column:
     )
 
 
-def _rule_hits(text: Column, lowered: Column) -> list[tuple[str, Column]]:
-    """(label, hit) per REGEX_RULES entry in frozen precedence order;
-    hit = sound cheap guard AND the rule's own regex."""
-    hits = []
-    for label, pattern in REGEX_RULES:
-        guard = F.lit(False)
-        for lit in _GUARD_LITERALS[label]:
-            guard = guard | lowered.contains(lit)
-        if label in _GUARD_DIGIT:
-            guard = guard | _has_digit(lowered)
-        small = _GUARD_SMALL.get(label)
-        if small is not None:
-            guard = guard | lowered.rlike(small)
-        hits.append((label, guard & text.rlike(pattern)))
-    return hits
 
 
-def _defect_hit(text: Column, lowered: Column | None = None) -> Column:
-    """True iff ANY labelling regex (or the symbol-run formatting
-    trigger) matches — ∃-equivalent to the old combined-alternation
-    scan, evaluated as per-rule guarded probes.  Pass a materialized
-    ``lowered`` column when available: an inline ``lower(text)`` in the
-    guards' short-circuit OR chains is re-evaluated per probe (codegen
-    CSE skips conditional branches)."""
-    if lowered is None:
-        lowered = F.lower(text)
-    hit = F.lit(False)
-    for _, rule_hit in _rule_hits(text, lowered):
-        hit = hit | rule_hit
-    return hit | text.rlike(P.SYMBOL_RUN)
+class _RuleColumns(NamedTuple):
+    features: dict[str, Column]  # helper columns, dropped before returning
+    label: Column                # frozen-precedence label cascade
+    clean: Column                # label would be Clean (no label column needed)
+    score: Column                # damped, rounded score; reads ``label``
+    clean_score: Column          # rounded score of a row known to be Clean
 
 
-def label_expr(text: Column) -> Column:
-    """Per-turn label: frozen-precedence regex rules, then the ratio-based
-    formatting rule, else Clean.
+@functools.cache
+def _rule_columns(text_col: str) -> _RuleColumns:
+    """Build every rule, feature and score expression once per process.
 
-    Physical fast path: every rule regex sits behind its own sound
-    cheap guard (``_rule_hits``), so the ~70 % Clean majority pays only
-    lowercase substring probes + tiny regexes, and a guard-tripping row
-    pays exactly the tripped rules' regexes.  Label semantics are
-    identical — parity with the oracle is tested.
+    The trees name columns only (no DataFrame or session inside), so one
+    build serves every DataFrame and every later session; rebuilding them
+    per call cost ~2,600 Py4J round trips of driver time per plan.
+
+    The counts and the lowered text are materialized as real columns
+    (``features``) rather than inlined at each use.  Each is then computed
+    once per row, and downstream generated code stays under the JVM JIT's
+    ~8 KB compile limit: one inlined label+score tree pushed into a Filter
+    blows it and the whole stage silently runs interpreted (~3× slower;
+    measured).  For ``_lowered`` the gain is larger: the ~60 guard ``contains``
+    probes sit in short-circuit OR chains, where codegen's subexpression
+    elimination does not fire, so an inline ``lower(text)`` re-lowered the
+    string once per probe (~2× on the guard pass).
     """
-    feats = feature_columns(text)
-    ratio_formatting = (
-        (feats["n_nonspace"] == 0)
-        | (feats["symbol_ratio"] > F.lit(SYMBOL_RATIO_MAX))
-        | (
-            (feats["n_chars"] >= F.lit(MIN_CHARS_FOR_ALPHA_RULE))
-            & (feats["alpha_ratio"] < F.lit(ALPHA_RATIO_MIN))
-        )
-    )
-    full = F.lit(LABELS[0])  # Clean (built innermost-out, so reversed below)
-    formatting = ratio_formatting | text.rlike(P.SYMBOL_RUN)
-    full = F.when(formatting, F.lit(FORMATTING_LABEL)).otherwise(full)
-    for label, hit in reversed(_rule_hits(text, F.lower(text))):
-        full = F.when(hit, F.lit(label)).otherwise(full)
-    return full
-
-
-def clean_score_expr(text: Column, label: Column) -> Column:
-    """Rule-based P(Clean) in [0,1], banker's-rounded to 3 decimals.
-
-    Non-Clean labels are damped by 0.4 so they land far below the salvage
-    threshold ``clean_score > 0.9`` (``src/salvage_low_quality_data.py:185``).
-    The expression tree (operand order included) is frozen for IEEE-754
-    bit-parity with the oracle and DuckDB SQL.
-    """
-    feats = feature_columns(text)
-    score_raw = (
-        F.lit(W_ALPHA) * feats["alpha_ratio"]
-        + F.lit(W_LEN)
-        * (F.least(feats["n_chars"], F.lit(LEN_NORM)).cast("double") / F.lit(float(LEN_NORM)))
-        + F.lit(W_SYM) * (F.lit(1.0) - feats["symbol_ratio"])
-    )
-    damped = F.when(label == F.lit(LABELS[0]), score_raw).otherwise(F.lit(0.4) * score_raw)
-    return F.bround(damped, 3)
-
-
-def _feature_cols_from(df: DataFrame, text: Column) -> DataFrame:
-    """Materialize the four feature counts as real columns.
-
-    Keeping them as named intermediate columns (instead of inlining the
-    expression tree at every use site) matters twice over: each count is
-    computed once per row, and every downstream operator's generated code
-    stays under the JVM JIT's ~8 KB compile limit — a single inlined
-    label+score expression tree pushed into a Filter blows that limit and
-    the whole stage silently runs interpreted (~3× slower; measured).
-    CollapseProject will not re-inline them because they are non-cheap and
-    multiply referenced.
-    """
+    text = F.coalesce(F.col(text_col), F.lit(""))
     n_chars = F.length(text)
-    return (
-        df.withColumn("_n_chars", n_chars)
-        .withColumn(
-            "_n_letter",
-            n_chars - F.length(F.regexp_replace(text, r"\p{L}+", "")),
-        )
-        .withColumn("_n_digit", n_chars - F.length(F.translate(text, "0123456789", "")))
-        .withColumn("_n_space", n_chars - F.length(F.translate(text, " \t\r\n\x0b\f", "")))
-    )
-
-
-def _feats_from_cols() -> dict[str, Column]:
-    n_chars = F.col("_n_chars")
-    n_nonspace = n_chars - F.col("_n_space")
-    n_symbol = n_chars - F.col("_n_letter") - F.col("_n_digit") - F.col("_n_space")
-    return {
-        "n_chars": n_chars,
-        "n_nonspace": n_nonspace,
-        "alpha_ratio": F.col("_n_letter").cast("double")
-        / F.greatest(F.lit(1), n_nonspace),
-        "symbol_ratio": n_symbol.cast("double") / F.greatest(F.lit(1), n_chars),
+    # Letters: length-diff of a regexp_replace over letter RUNS (one regex
+    # iteration per run; regexp_count would materialize every match).
+    # Digits/whitespace: ``translate`` char-map passes, identical to
+    # counting the ASCII classes [0-9] / [ \t\r\n\x0B\f] the oracle uses.
+    features = {
+        "_n_chars": n_chars,
+        "_n_letter": n_chars - F.length(F.regexp_replace(text, r"\p{L}+", "")),
+        "_n_digit": n_chars - F.length(F.translate(text, "0123456789", "")),
+        "_n_space": n_chars - F.length(F.translate(text, " \t\r\n\x0b\f", "")),
+        "_lowered": F.lower(text),
     }
 
-
-def _ratio_formatting(feats: dict[str, Column]) -> Column:
-    return (
-        (feats["n_nonspace"] == 0)
-        | (feats["symbol_ratio"] > F.lit(SYMBOL_RATIO_MAX))
-        | (
-            (feats["n_chars"] >= F.lit(MIN_CHARS_FOR_ALPHA_RULE))
-            & (feats["alpha_ratio"] < F.lit(ALPHA_RATIO_MIN))
-        )
-    )
-
-
-def clean_fastpath_predicate(
-    text: Column, lowered: Column | None = None
-) -> Column:
-    """True iff the label would be Clean — as a compact standalone
-    predicate (per-rule guarded probes + char-map counts).  Lets pipelines
-    filter *before* scoring when the removal set is every non-Clean label
-    (the cheap-filter-first rewrite anticipated in SURVEY.md §7.2):
-    pushed into the scan, it never materializes labels for dropped rows.
-    ``lowered``: see ``_defect_hit``."""
-    feats = feature_columns(text)
+    n_chars, n_letter, n_digit, n_space, lowered = map(F.col, features)
+    n_nonspace = n_chars - n_space
+    n_symbol = n_chars - n_letter - n_digit - n_space
+    alpha_ratio = n_letter.cast("double") / F.greatest(F.lit(1), n_nonspace)
+    symbol_ratio = n_symbol.cast("double") / F.greatest(F.lit(1), n_chars)
     ratio_formatting = (
-        (feats["n_nonspace"] == 0)
-        | (feats["symbol_ratio"] > F.lit(SYMBOL_RATIO_MAX))
+        (n_nonspace == 0)
+        | (symbol_ratio > F.lit(SYMBOL_RATIO_MAX))
         | (
-            (feats["n_chars"] >= F.lit(MIN_CHARS_FOR_ALPHA_RULE))
-            & (feats["alpha_ratio"] < F.lit(ALPHA_RATIO_MIN))
+            (n_chars >= F.lit(MIN_CHARS_FOR_ALPHA_RULE))
+            & (alpha_ratio < F.lit(ALPHA_RATIO_MIN))
         )
     )
-    return ~_defect_hit(text, lowered) & ~ratio_formatting
+    symbol_run = text.rlike(P.SYMBOL_RUN)
+
+    # hit = the rule's sound cheap guard AND the rule's own regex
+    hits = []
+    for label, pattern in REGEX_RULES:
+        probes = [lowered.contains(lit) for lit in _GUARD_LITERALS[label]]
+        if label in _GUARD_DIGIT:
+            probes.append(_has_digit(lowered))
+        if _GUARD_SMALL.get(label) is not None:
+            probes.append(lowered.rlike(_GUARD_SMALL[label]))
+        hits.append((label, functools.reduce(operator.or_, probes) & text.rlike(pattern)))
+
+    cascade = F.when(ratio_formatting | symbol_run, F.lit(FORMATTING_LABEL)).otherwise(
+        F.lit(LABELS[0])
+    )
+    for label, hit in reversed(hits):
+        cascade = F.when(hit, F.lit(label)).otherwise(cascade)
+    defect = functools.reduce(operator.or_, [hit for _, hit in hits] + [symbol_run])
+
+    # Non-Clean labels are damped by 0.4 so they land far below the salvage
+    # threshold ``clean_score > 0.9`` (src/salvage_low_quality_data.py:185).
+    # Operand order is frozen for IEEE-754 bit parity with the oracle and
+    # the DuckDB SQL.
+    raw = (
+        F.lit(W_ALPHA) * alpha_ratio
+        + F.lit(W_LEN)
+        * (F.least(n_chars, F.lit(LEN_NORM)).cast("double") / F.lit(float(LEN_NORM)))
+        + F.lit(W_SYM) * (F.lit(1.0) - symbol_ratio)
+    )
+    damped = F.when(F.col("label") == F.lit(LABELS[0]), raw).otherwise(F.lit(0.4) * raw)
+    return _RuleColumns(
+        features=features,
+        label=cascade,
+        clean=~defect & ~ratio_formatting,
+        score=F.bround(damped, 3),
+        clean_score=F.bround(raw, 3),
+    )
+
+
+def _with_features(df: DataFrame, text_col: str) -> DataFrame:
+    return df.withColumns(_rule_columns(text_col).features)
 
 
 def barrier_filter(df: DataFrame, keep: Column) -> DataFrame:
@@ -322,49 +251,18 @@ def barrier_filter(df: DataFrame, keep: Column) -> DataFrame:
 
 
 def clean_fastpath_scored(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Fused remove-all lane (r9): filter to Clean rows AND score them in
-    ONE pass over materialized feature/lowered columns — byte-identical
-    to ``score_clean_survivors(df.filter(clean_fastpath_predicate(...)))``
-    (same expressions), but the char-class counts and the lowered text
-    are computed once instead of once for the predicate and once for the
-    score (the predicate path re-derived them per evaluation).  The
-    nondeterministic barrier column blocks PushDownPredicates from
-    substituting the materialized columns back into the filter."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    base = _feature_cols_from(df, text).withColumn("_lowered", F.lower(text))
-    feats = _feats_from_cols()
-    keep = ~_defect_hit(text, F.col("_lowered")) & ~_ratio_formatting(feats)
-    kept = barrier_filter(base, keep).drop("_lowered")
-    score_raw = (
-        F.lit(W_ALPHA) * feats["alpha_ratio"]
-        + F.lit(W_LEN)
-        * (F.least(feats["n_chars"], F.lit(LEN_NORM)).cast("double") / F.lit(float(LEN_NORM)))
-        + F.lit(W_SYM) * (F.lit(1.0) - feats["symbol_ratio"])
-    )
-    return (
-        kept.withColumn("label", F.lit(LABELS[0]))
-        .withColumn("clean_score", F.bround(score_raw, 3))
-        .drop("_n_chars", "_n_letter", "_n_digit", "_n_space")
-    )
-
-
-def score_clean_survivors(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Score rows already known to be Clean (e.g. survivors of
-    ``clean_fastpath_predicate``): label is a literal and the score needs
-    only the char-class counts — no regex cascade at all.  Byte-identical
-    to ``score_turns`` on such rows (parity-tested)."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    base = _feature_cols_from(df, text).withColumn("label", F.lit(LABELS[0]))
-    feats = _feats_from_cols()
-    score_raw = (
-        F.lit(W_ALPHA) * feats["alpha_ratio"]
-        + F.lit(W_LEN)
-        * (F.least(feats["n_chars"], F.lit(LEN_NORM)).cast("double") / F.lit(float(LEN_NORM)))
-        + F.lit(W_SYM) * (F.lit(1.0) - feats["symbol_ratio"])
-    )
-    return base.withColumn("clean_score", F.bround(score_raw, 3)).drop(
-        "_n_chars", "_n_letter", "_n_digit", "_n_space"
-    )
+    """Fused remove-all lane: keep only the rows ``score_turns`` would
+    label Clean and score them, in one pass over the materialized
+    feature/lowered columns.  Survivors are Clean by construction, so the
+    label is a literal and no row pays the label cascade; the result
+    equals ``score_turns(df).filter(label == "Clean")``.  The barrier
+    (``barrier_filter``) blocks PushDownPredicates from substituting the
+    materialized columns back into a scan-level filter."""
+    rc = _rule_columns(text_col)
+    kept = barrier_filter(_with_features(df, text_col), rc.clean)
+    return kept.withColumns(
+        {"label": F.lit(LABELS[0]), "clean_score": rc.clean_score}
+    ).drop(*rc.features)
 
 
 def score_turns(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -373,34 +271,13 @@ def score_turns(df: DataFrame, text_col: str = "text") -> DataFrame:
     Three slim projections (features → label → score) — the Spark analog
     of the reference's classify-then-annotate step
     (``src/classifier_inference_pipeline.py:103-123``) with the model
-    replaced by deterministic rules.  ``label`` is computed from the
-    materialized feature columns; ``clean_score`` references the ``label``
-    column (no re-inlining — see ``_feature_cols_from``).
+    replaced by deterministic rules.  ``clean_score`` reads the ``label``
+    column instead of re-inlining the cascade.
     """
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    # ``_lowered`` is materialized as a real column for the same reason
-    # the feature counts are (see _feature_cols_from): the ~60 guard
-    # ``contains`` probes sit in short-circuit OR chains, where codegen's
-    # subexpression elimination does NOT fire (conditional branches are
-    # excluded), so an inline ``lower(text)`` was re-lowering the string
-    # once per probe — measured ~2× on the guard pass (r9).
-    base = _feature_cols_from(df, text).withColumn("_lowered", F.lower(text))
-    feats = _feats_from_cols()
-    full = F.lit(LABELS[0])
-    formatting = _ratio_formatting(feats) | text.rlike(P.SYMBOL_RUN)
-    full = F.when(formatting, F.lit(FORMATTING_LABEL)).otherwise(full)
-    for label, hit in reversed(_rule_hits(text, F.col("_lowered"))):
-        full = F.when(hit, F.lit(label)).otherwise(full)
-    labeled = base.withColumn("label", full)
-    score_raw = (
-        F.lit(W_ALPHA) * feats["alpha_ratio"]
-        + F.lit(W_LEN)
-        * (F.least(feats["n_chars"], F.lit(LEN_NORM)).cast("double") / F.lit(float(LEN_NORM)))
-        + F.lit(W_SYM) * (F.lit(1.0) - feats["symbol_ratio"])
-    )
-    damped = F.when(F.col("label") == F.lit(LABELS[0]), score_raw).otherwise(
-        F.lit(0.4) * score_raw
-    )
-    return labeled.withColumn("clean_score", F.bround(damped, 3)).drop(
-        "_n_chars", "_n_letter", "_n_digit", "_n_space", "_lowered"
+    rc = _rule_columns(text_col)
+    return (
+        _with_features(df, text_col)
+        .withColumn("label", rc.label)
+        .withColumn("clean_score", rc.score)
+        .drop(*rc.features)
     )

@@ -12,6 +12,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Shuffle/spill scratch on tmpfs when available: local-mode shuffles are
+# loopback disk I/O otherwise, which adds variance and serializes on the
+# virtio queue.  (On a real cluster this is the NVMe-backed local dir.)
+_SHM_SCRATCH = "/dev/shm/spark_local"
+_MAX_DRIVER_MB = 12 * 1024
+
+
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 12g: a flat 12g heap on a 15 GB
+    host leaves too little for the Python workers and the OS."""
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (AttributeError, OSError, ValueError):
+        return f"{_MAX_DRIVER_MB}m"
+    return f"{min(_MAX_DRIVER_MB, phys_mb // 2)}m"
+
 
 def get_spark(
     app_name: str = "quality_filter",
@@ -43,7 +59,10 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2500"),
         )
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Align Spark's whole-stage-codegen fallback with the JVM JIT's
@@ -52,13 +71,11 @@ def get_spark(
         # (measured 1.6× on the rule engine's regex cascade).
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
     )
-    # Shuffle/spill scratch on tmpfs when available: local-mode shuffles are
-    # loopback disk I/O otherwise, which adds variance and serializes on the
-    # virtio queue.  (On a real cluster this is the NVMe-backed local dir.)
-    if os.path.isdir("/dev/shm"):
-        scratch = "/dev/shm/spark_local"
-        os.makedirs(scratch, exist_ok=True)
-        builder = builder.config("spark.local.dir", scratch)
+    if "spark.local.dir" not in (extra_conf or {}) and os.path.isdir(
+        os.path.dirname(_SHM_SCRATCH)
+    ):
+        os.makedirs(_SHM_SCRATCH, exist_ok=True)
+        builder = builder.config("spark.local.dir", _SHM_SCRATCH)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

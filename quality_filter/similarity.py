@@ -65,6 +65,17 @@ def cosine_topk(
     )
 
 
+# srp_bucket sums 32-bit ``shiftleft(1, i)`` terms: i = 31 sets the sign
+# bit (ids stay distinct), but i >= 32 wraps the shift distance, so wider
+# signatures would silently collide
+MAX_SRP_BITS = 31
+
+
+def _check_n_bits(n_bits: int) -> None:
+    if n_bits > MAX_SRP_BITS:
+        raise ValueError(f"n_bits must be <= {MAX_SRP_BITS}, got {n_bits}")
+
+
 def _hyperplanes(dim: int, n_bits: int, seed: int) -> list[list[float]]:
     rng = np.random.RandomState(seed)
     return rng.randn(n_bits, dim).astype(float).tolist()
@@ -122,6 +133,7 @@ def embedding_near_dups(
     wire once per side it appears on, not once per collision)."""
     from quality_filter.dedup import bucket_pairs
 
+    _check_n_bits(n_bits)
     tables = [_hyperplanes(dim, n_bits, seed + 1000 * t) for t in range(n_tables)]
     renamed = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     parts = [
@@ -210,6 +222,7 @@ def lsh_ann_topk(
     via one id-equi-join), so no shuffle ships a vector more than once."""
     from quality_filter.dedup import cap_bucket_occupancy
 
+    _check_n_bits(n_bits)
     tables = [
         _hyperplanes(dim, n_bits, seed + 1000 * t) for t in range(n_tables)
     ]

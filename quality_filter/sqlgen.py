@@ -49,7 +49,7 @@ def _features(t: str) -> dict[str, str]:
 
 def label_sql(t: str) -> str:
     """CASE expression assigning the rule label to text expression ``t``
-    (mirror of rules.label_expr)."""
+    (mirror of the label cascade in rules.score_turns)."""
     f = _features(t)
     branches = "".join(
         f"WHEN regexp_matches({t}, '{pat}') THEN '{label.replace(chr(39), chr(39)*2)}' "
@@ -108,7 +108,7 @@ def bround3_sql(x: str) -> str:
 
 def raw_score_sql(t: str) -> str:
     """The unrounded score formula — identical operand order to
-    rules.clean_score_expr for IEEE-754 bit parity."""
+    the score in rules.score_turns for IEEE-754 bit parity."""
     f = _features(t)
     return (
         f"({W_ALPHA} * {f['alpha_ratio']} "
@@ -118,7 +118,7 @@ def raw_score_sql(t: str) -> str:
 
 
 def clean_score_sql(t: str, label_expr: str) -> str:
-    """Mirror of rules.clean_score_expr (damped non-Clean, banker's-rounded
+    """Mirror of rules.score_turns' clean_score (damped non-Clean, banker's-rounded
     to 3 decimals with Spark semantics)."""
     raw = raw_score_sql(t)
     damped = (

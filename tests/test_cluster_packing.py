@@ -51,6 +51,25 @@ def test_connected_components_no_edges(spark):
     assert got == {3: 3, 4: 4}
 
 
+def test_connected_components_max_iter_below_two_rejected(spark):
+    # the fused first round leaves no round to confirm convergence with
+    # max_iter=1: reject it up front, before the edge set is persisted
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    for bad in (1, 0):
+        with pytest.raises(ValueError, match="max_iter"):
+            connected_components(
+                _nodes(spark, [1, 2]), _edges(spark, [(1, 2)]), max_iter=bad
+            )
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    stats = {}
+    comp = connected_components(
+        _nodes(spark, [1, 2, 3]), _edges(spark, [(2, 1)]), max_iter=2, stats=stats
+    )
+    got = {r["doc_id"]: r["cluster_rep"] for r in comp.collect()}
+    assert got == {1: 1, 2: 1, 3: 3}
+    assert stats == {"iterations": 2}
+
+
 def test_cluster_dedup_transitive_chain_one_pass(spark):
     # A~B, B~C but not A~C: one-pass cluster dedup keeps only A
     df = spark.createDataFrame(

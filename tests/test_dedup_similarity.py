@@ -150,6 +150,41 @@ def test_lsh_ann_recall(spark, embeddings):
     assert sum(recalls) / len(recalls) >= 0.5, recalls
 
 
+def test_srp_n_bits_bound(spark, embeddings):
+    """SRP bucket ids are 32-bit: n_bits above 31 would wrap the shift
+    and collide buckets, so every public caller rejects it; in range the
+    id is the plain sum of per-plane sign bits."""
+    from quality_filter.similarity import (
+        _hyperplanes,
+        embedding_near_dups,
+        semantic_dedup,
+        srp_bucket,
+    )
+
+    df, _ = embeddings
+    for call in (
+        lambda: embedding_near_dups(df, n_bits=32),
+        lambda: semantic_dedup(df, n_bits=32),
+        lambda: lsh_ann_topk(df, df, n_bits=32),
+    ):
+        with pytest.raises(ValueError, match="n_bits"):
+            call()
+
+    planes = _hyperplanes(64, 8, seed=42)
+    rows = df.select(
+        "embedding", srp_bucket(F.col("embedding"), planes).alias("bk")
+    ).collect()
+    for r in rows:
+        want = 0
+        for i, plane in enumerate(planes):
+            dot = 0.0
+            for x, y in zip(r["embedding"], plane):
+                dot += float(x) * y
+            if dot >= 0:
+                want += 1 << i
+        assert r["bk"] == want
+
+
 def test_embedding_near_dups(spark, embeddings):
     from pyspark.sql import functions as F
     from quality_filter.similarity import embedding_near_dups
